@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.sqrt
 
-/** Vector math over `ArrayType(DoubleType)` columns, built purely from
-  * Catalyst higher-order functions — zero UDFs, so everything stays inside
-  * whole-stage codegen and survives column pruning / predicate pushdown.
+/** Vector math over `ArrayType(DoubleType)` columns, as Column wrappers over
+  * the native codegen expressions in [[graft.plans]] — zero UDFs, so
+  * everything stays inside whole-stage codegen and survives column pruning
+  * / predicate pushdown.
   *
   * Implements the reference's declared metric surface:
   * `MetricType.COSINE` (reference `TencentVDB.py:46`). Dim-agnostic — the
@@ -13,17 +14,12 @@ import org.apache.spark.sql.functions._
   * 1024-d, `TencentVDB.py:46`).
   *
   * Scale note: each function is a per-row projection — embarrassingly
-  * parallel, no shuffle. For a 100 TB corpus the cosine cost is dominated by
-  * the scan; `dot` is O(dim) per row with no allocation beyond the zipped
-  * array.
+  * parallel, no shuffle, O(dim) per row with no allocation beyond the
+  * output.
   */
 object VectorFunctions {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-  import graft.plans.{CosineSimilarity, DotProduct, L2DistanceSq}
-
-  // ---- Native codegen'd fast path (graft.plans.VectorExpressions) ----
-  // Same double-accumulation order as the HOF versions below, so rounded
-  // scores are bit-identical; ~50× less per-row overhead (no Lambda boxing).
+  import graft.plans.{CosineSimilarity, DotProduct, L2DistanceSq, L2Normalize}
 
   /** Σ aᵢ·bᵢ — tight primitive loop inside whole-stage codegen. */
   def dotFast(a: Column, b: Column): Column = toCol(DotProduct(toExpr(a), toExpr(b)))
@@ -34,51 +30,11 @@ object VectorFunctions {
   /** Σ (aᵢ−bᵢ)² fused single pass. */
   def l2DistanceSqFast(a: Column, b: Column): Column = toCol(L2DistanceSq(toExpr(a), toExpr(b)))
 
-  // ---- Pure higher-order-function formulation (no custom code) ----
-
-  /** Σ aᵢ·bᵢ via zip_with + aggregate (CodegenFallback — interpreted; prefer dotFast in hot paths). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** ‖a‖₂ */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
+  def l2Norm(a: Column): Column = sqrt(dotFast(a, a))
 
-  /** cosine(a, b) = a·b / (‖a‖‖b‖) — ref metric `TencentVDB.py:46`.
-    * Zero-norm inputs score 0.0, matching [[cosineFast]] (an unguarded
-    * 0/0 would emit NaN here while the fused path emits 0.0, and NaN
-    * breaks top-k ordering).
+  /** a / ‖a‖ — unit-normalize an embedding (ingest-time materialization);
+    * a zero vector stays the zero vector (see [[graft.plans.L2Normalize]]).
     */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
-    when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
-  }
-
-  /** Cosine against a pre-normalized corpus column: when the corpus norm is
-    * materialized once (ingest time, [[graft.sources.CatalogOps
-    * .createVectorCollection]]), per-query scoring is a single dot — the
-    * 100 TB-scale path ([[graft.operators.KnnOps.topKPrenormed]]).
-    */
-  def cosinePrenormed(aUnit: Column, bUnit: Column): Column = dotFast(aUnit, bUnit)
-
-  /** a / ‖a‖ — unit-normalize an embedding (ingest-time materialization).
-    * A zero vector stays the zero vector (its signed hash buckets can
-    * cancel exactly): dividing by the true 0 norm would emit all-NaN
-    * components and poison every downstream score.
-    */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, a).otherwise(transform(a, x => x / n))
-  }
-
-  /** Squared L2 distance (euclidean metric surface, ref dim table
-    * `TencentVDB.py:38-44` declares alternate models/metrics).
-    */
-  def l2DistanceSq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
-  /** Element-wise sum of two vectors (centroid building block). */
-  def vecAdd(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x + y)
-
-  /** Scale a vector by a scalar column. */
-  def vecScale(a: Column, s: Column): Column = transform(a, x => x * s)
+  def l2Normalize(a: Column): Column = toCol(L2Normalize(toExpr(a)))
 }

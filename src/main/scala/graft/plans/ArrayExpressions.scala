@@ -42,9 +42,20 @@ case class SortedIntersectSize(left: Expression, right: Expression)
           s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectSize.intersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.SortedIntersectSize.intersectSize($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object SortedIntersectSize {
+  /** Two-pointer merge count over two sorted distinct arrays. */
+  def intersectSize(x: ArrayData, y: ArrayData): Int = {
     val n1 = x.numElements()
     val n2 = y.numElements()
     var i = 0; var j = 0; var c = 0
@@ -56,31 +67,6 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n1 = ctx.freshName("n1")
-      val n2 = ctx.freshName("n2")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val cmp = ctx.freshName("cmp")
-      s"""
-         |final int $n1 = $a.numElements();
-         |final int $n2 = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $n1 && $j < $n2) {
-         |  final int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-         |  if ($cmp == 0) { $c++; $i++; $j++; }
-         |  else if ($cmp < 0) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** |{x ∈ A : x ∈ B}| by BINARY SEARCH of each left element into the sorted
@@ -113,9 +99,20 @@ case class SortedProbeCount(left: Expression, right: Expression)
           s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedProbeCount.probeCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.SortedProbeCount.probeCount($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object SortedProbeCount {
+  /** Binary search of each left element into the sorted right array. */
+  def probeCount(x: ArrayData, y: ArrayData): Int = {
     val n1 = x.numElements()
     val n2 = y.numElements()
     var i = 0; var c = 0
@@ -133,40 +130,6 @@ case class SortedProbeCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n1 = ctx.freshName("n1")
-      val n2 = ctx.freshName("n2")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid")
-      val cmp = ctx.freshName("cmp")
-      val needle = ctx.freshName("needle")
-      s"""
-         |final int $n1 = $a.numElements();
-         |final int $n2 = $b.numElements();
-         |int $i = 0; int $c = 0;
-         |while ($i < $n1) {
-         |  final org.apache.spark.unsafe.types.UTF8String $needle = $a.getUTF8String($i);
-         |  int $lo = 0; int $hi = $n2 - 1;
-         |  while ($lo <= $hi) {
-         |    final int $mid = ($lo + $hi) >>> 1;
-         |    final int $cmp = $b.getUTF8String($mid).compareTo($needle);
-         |    if ($cmp == 0) { $c++; $lo = $hi + 2; }
-         |    else if ($cmp < 0) { $lo = $mid + 1; }
-         |    else { $hi = $mid - 1; }
-         |  }
-         |  $i++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Dictionary-encode a DISTINCT token array against a frequency-pruned
@@ -279,8 +242,25 @@ case class BitsetIntersectSize(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements()) null else BitsetIntersectSize.intersectSize(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+       |if ($a.numElements() != $b.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.plans.BitsetIntersectSize.intersectSize($a, $b);
+       |}
+     """.stripMargin)
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object BitsetIntersectSize {
+  def intersectSize(x: ArrayData, y: ArrayData): Int = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
     var c = 0
     var i = 0
     while (i < n) {
@@ -289,26 +269,4 @@ case class BitsetIntersectSize(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $c = 0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $c += java.lang.Long.bitCount($a.getLong($i) & $b.getLong($i));
-         |  }
-         |  ${ev.value} = $c;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }

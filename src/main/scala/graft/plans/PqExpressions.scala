@@ -181,6 +181,49 @@ object PqSubAssign {
   * construction (codes are fixed-width binary); a wrong-width code row
   * throws rather than scoring garbage.
   */
+case class PqAdcDot(child: Expression, lut: Seq[Double], m: Int, k: Int)
+    extends UnaryExpression {
+
+  require(m > 0 && k > 0 && lut.length == m * k,
+    s"LUT size ${lut.length} != m·k (m=$m, k=$k)")
+  require(lut.forall(java.lang.Double.isFinite), "LUT entries must be finite")
+
+  override def prettyName: String = "pq_adc_dot"
+  override def dataType: DataType = DoubleType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case org.apache.spark.sql.types.BinaryType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires binary codes, got ${other.simpleString}")
+  }
+
+  @transient private lazy val lutArr: Array[Double] = lut.toArray
+
+  override def nullSafeEval(v: Any): Any =
+    PqAdcDot.adcDot(v.asInstanceOf[Array[Byte]], lutArr, m, k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lutRef = ctx.addReferenceObj("lut", lutArr, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.PqAdcDot.adcDot($a, $lutRef, $m, $k);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object PqAdcDot {
+  def adcDot(codes: Array[Byte], lut: Array[Double], m: Int, k: Int): Double = {
+    if (codes.length != m) {
+      throw new IllegalArgumentException(s"pq_adc_dot: code length ${codes.length} != $m")
+    }
+    var s = 0.0
+    var i = 0
+    while (i < m) { s += lut(i * k + (codes(i) & 0xFF)); i += 1 }
+    s
+  }
+}
+
 /** Batch twin of [[PqAdcDot]]: where the single-query probe bakes its LUT
   * in as a reference object, a BATCH of queries arrives as a broadcast
   * column of per-query LUTs ([[graft.operators.KnnOps.topKForQueriesPq]]),
@@ -206,80 +249,28 @@ case class PqAdcDotCol(left: Expression, right: Expression, m: Int, k: Int)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val codes = a.asInstanceOf[Array[Byte]]
     val lut = b.asInstanceOf[ArrayData]
-    if (codes.length != m || lut.numElements() != m * k) return null
-    var s = 0.0
-    var i = 0
-    while (i < m) { s += lut.getDouble(i * k + (codes(i) & 0xFF)); i += 1 }
-    s
+    if (codes.length != m || lut.numElements() != m * k) null
+    else PqAdcDotCol.adcDot(codes, lut, m, k)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($a.length != $m || $b.numElements() != ${m * k}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $s += $b.getDouble($i * $k + (((int) $a[$i]) & 0xFF));
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+       |if ($a.length != $m || $b.numElements() != ${m * k}) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.plans.PqAdcDotCol.adcDot($a, $b, $m, $k);
+       |}
+     """.stripMargin)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class PqAdcDot(child: Expression, lut: Seq[Double], m: Int, k: Int)
-    extends UnaryExpression {
-
-  require(m > 0 && k > 0 && lut.length == m * k,
-    s"LUT size ${lut.length} != m·k (m=$m, k=$k)")
-  require(lut.forall(java.lang.Double.isFinite), "LUT entries must be finite")
-
-  override def prettyName: String = "pq_adc_dot"
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary codes, got ${other.simpleString}")
-  }
-
-  @transient private lazy val lutArr: Array[Double] = lut.toArray
-
-  override def nullSafeEval(v: Any): Any = {
-    val codes = v.asInstanceOf[Array[Byte]]
-    require(codes.length == m, s"$prettyName: code length ${codes.length} != $m")
+object PqAdcDotCol {
+  def adcDot(codes: Array[Byte], lut: ArrayData, m: Int, k: Int): Double = {
     var s = 0.0
     var i = 0
-    while (i < m) { s += lutArr(i * k + (codes(i) & 0xFF)); i += 1 }
+    while (i < m) { s += lut.getDouble(i * k + (codes(i) & 0xFF)); i += 1 }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lutRef = ctx.addReferenceObj("lut", lutArr, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($a.length != $m) {
-         |  throw new IllegalArgumentException(
-         |    "$prettyName: code length " + $a.length + " != $m");
-         |}
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $m; $i++) {
-         |  $s += $lutRef[$i * $k + (((int) $a[$i]) & 0xFF)];
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

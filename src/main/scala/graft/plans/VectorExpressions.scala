@@ -13,9 +13,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * cosine THE inner loop of every knn/similarity operator. Spark's
   * `zip_with`/`aggregate` higher-order functions are CodegenFallback
   * (interpreted, boxing a Lambda per element) — measured 23 µs/pair on the
-  * sf0.1 similarity join. These expressions generate a tight primitive
-  * `double` loop over `ArrayData` inside whole-stage codegen instead
-  * (~50× less per-row overhead), which is what a 100 TB scan needs.
+  * sf0.1 similarity join. These expressions run a tight primitive `double`
+  * loop over `ArrayData` inside whole-stage codegen instead (~50× less
+  * per-row overhead), which is what a 100 TB scan needs.
+  *
+  * Every expression here has ONE kernel, a method on its companion object:
+  * `nullSafeEval` calls it and `doGenCode` emits a call to it, so the
+  * interpreted and generated paths run the same JIT-compiled body and
+  * agree bitwise by construction (the [[FeatureHash.embed]] pattern).
   *
   * Null elements inside the arrays are not expected (embedding fixtures and
   * ingest both produce non-null elements); element null-checks are skipped
@@ -32,6 +37,12 @@ abstract class BinaryVectorExpression extends BinaryExpression {
   // Nullable regardless of child nullability: mismatched dims yield null.
   override def nullable: Boolean = true
 
+  /** The companion-object kernel, called on two arrays of equal length. */
+  protected def kernel(x: ArrayData, y: ArrayData): Double
+
+  /** The same kernel's Java name, for the generated call. */
+  protected def kernelName: String
+
   private def isDoubleArray(t: DataType): Boolean = t match {
     case ArrayType(DoubleType, _) => true
     case _ => false
@@ -45,44 +56,41 @@ abstract class BinaryVectorExpression extends BinaryExpression {
         s"$prettyName requires two array<double> arguments, got " +
           s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
     }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements()) null else kernel(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+       |if ($a.numElements() != $b.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = $kernelName($a, $b);
+       |}
+     """.stripMargin)
 }
 
 /** Σ aᵢ·bᵢ over two double arrays (null on length mismatch). */
 case class DotProduct(left: Expression, right: Expression) extends BinaryVectorExpression {
   override def prettyName: String = "vec_dot"
+  override protected def kernel(x: ArrayData, y: ArrayData): Double = DotProduct.dot(x, y)
+  override protected def kernelName: String = "graft.plans.DotProduct.dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object DotProduct {
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
     var s = 0.0
     var i = 0
     while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** cosine(a, b) = a·b / (‖a‖‖b‖), one fused pass over both arrays.
@@ -92,12 +100,16 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryVectorE
   */
 case class CosineSimilarity(left: Expression, right: Expression) extends BinaryVectorExpression {
   override def prettyName: String = "vec_cosine"
+  override protected def kernel(x: ArrayData, y: ArrayData): Double = CosineSimilarity.cosine(x, y)
+  override protected def kernelName: String = "graft.plans.CosineSimilarity.cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object CosineSimilarity {
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
     var ab = 0.0; var aa = 0.0; var bb = 0.0
     var i = 0
     while (i < n) {
@@ -108,36 +120,70 @@ case class CosineSimilarity(left: Expression, right: Expression) extends BinaryV
     val d = math.sqrt(aa) * math.sqrt(bb)
     if (d == 0.0) 0.0 else ab / d
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val ab = ctx.freshName("ab")
-      val aa = ctx.freshName("aa")
-      val bb = ctx.freshName("bb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $ab = 0.0; double $aa = 0.0; double $bb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $xv = $a.getDouble($i);
-         |    final double $yv = $b.getDouble($i);
-         |    $ab += $xv * $yv; $aa += $xv * $xv; $bb += $yv * $yv;
-         |  }
-         |  final double $d = java.lang.Math.sqrt($aa) * java.lang.Math.sqrt($bb);
-         |  ${ev.value} = ($d == 0.0) ? 0.0 : $ab / $d;
-         |}
-       """.stripMargin
-    })
+/** Squared L2 distance Σ (aᵢ-bᵢ)², fused single pass. */
+case class L2DistanceSq(left: Expression, right: Expression) extends BinaryVectorExpression {
+  override def prettyName: String = "vec_l2sq"
+  override protected def kernel(x: ArrayData, y: ArrayData): Double = L2DistanceSq.l2sq(x, y)
+  override protected def kernelName: String = "graft.plans.L2DistanceSq.l2sq"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object L2DistanceSq {
+  def l2sq(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { val dd = x.getDouble(i) - y.getDouble(i); s += dd * dd; i += 1 }
+    s
+  }
+}
+
+/** a / ‖a‖ — unit-normalize an embedding (ingest-time materialization),
+  * O(dim) per row: one sequential Σ aᵢ² fold, then aᵢ / √Σ. That IEEE
+  * order makes it bit-identical to the higher-order form
+  * `when(‖a‖ = 0, a).otherwise(transform(a, x -> x / ‖a‖))` (pinned in
+  * VectorExpressionsSpec). A zero vector is returned unchanged (its signed
+  * hash buckets can cancel exactly): dividing by the true 0 norm would emit
+  * all-NaN components and poison every downstream score.
+  */
+case class L2Normalize(child: Expression) extends UnaryExpression {
+  override def prettyName: String = "vec_l2_normalize"
+  // containsNull = true, the higher-order form's type: stored unit-vector
+  // columns keep their Parquet schema
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<double>, got ${other.simpleString}")
+  }
+
+  override def nullSafeEval(v: Any): Any = L2Normalize.normalize(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.plans.L2Normalize.normalize($a);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object L2Normalize {
+  def normalize(x: ArrayData): ArrayData = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { val v = x.getDouble(i); s += v * v; i += 1 }
+    val norm = math.sqrt(s)
+    if (norm == 0.0) return x
+    val out = new Array[Double](n)
+    i = 0
+    while (i < n) { out(i) = x.getDouble(i) / norm; i += 1 }
+    new GenericArrayData(out)
+  }
 }
 
 /** All random-hyperplane LSH band keys of a vector in ONE fused loop:
@@ -180,13 +226,26 @@ case class HyperplaneBandKeys(
   // One flat primitive copy shared by interpreted + codegen paths.
   @transient private lazy val planesArr: Array[Double] = planes.toArray
 
-  private def dim: Int = planes.length / (bands * rowsPerBand)
+  override def nullSafeEval(v: Any): Any =
+    HyperplaneBandKeys.bandKeys(v.asInstanceOf[ArrayData], planesArr, bands, rowsPerBand)
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val pRef = ctx.addReferenceObj("planes", planesArr, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.HyperplaneBandKeys.bandKeys($a, $pRef, $bands, $rowsPerBand);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object HyperplaneBandKeys {
+  def bandKeys(x: ArrayData, planes: Array[Double], bands: Int, rowsPerBand: Int): ArrayData = {
     val n = x.numElements()
-    require(n == dim, s"$prettyName: vector dim $n != plane dim $dim")
-    val p = planesArr
+    val dim = planes.length / (bands * rowsPerBand)
+    if (n != dim) {
+      throw new IllegalArgumentException(s"vec_band_keys: vector dim $n != plane dim $dim")
+    }
     val keys = new Array[Long](bands)
     var off = 0
     var b = 0
@@ -196,7 +255,7 @@ case class HyperplaneBandKeys(
       while (j < rowsPerBand) {
         var s = 0.0
         var i = 0
-        while (i < n) { s += x.getDouble(i) * p(off + i); i += 1 }
+        while (i < n) { s += x.getDouble(i) * planes(off + i); i += 1 }
         if (s > 0) key |= (1L << j)
         off += n
         j += 1
@@ -206,45 +265,6 @@ case class HyperplaneBandKeys(
     }
     new GenericArrayData(keys)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("planes", planesArr, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val keys = ctx.freshName("keys")
-      val key = ctx.freshName("key")
-      val off = ctx.freshName("off")
-      val s = ctx.freshName("s")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "$prettyName: vector dim " + $n + " != plane dim $dim");
-         |}
-         |final long[] $keys = new long[$bands];
-         |int $off = 0;
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $key = 0L;
-         |  for (int $j = 0; $j < $rowsPerBand; $j++) {
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      $s += $a.getDouble($i) * $pRef[$off + $i];
-         |    }
-         |    if ($s > 0) $key |= (1L << $j);
-         |    $off += $n;
-         |  }
-         |  $keys[$b] = $key;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($keys);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Index of the nearest centroid by cosine similarity — the IVF cell
@@ -274,70 +294,65 @@ case class NearestCentroid(
 
   @transient private lazy val centArr: Array[Double] = centroids.toArray
   // Centroid norms are constant across rows — precompute once.
-  @transient private lazy val centNorm: Array[Double] = {
-    val dim = centroids.length / k
-    Array.tabulate(k) { c =>
-      var s = 0.0; var i = 0
-      while (i < dim) { val v = centArr(c * dim + i); s += v * v; i += 1 }
-      math.sqrt(s)
-    }
-  }
+  @transient private lazy val centNorm: Array[Double] = NearestCentroid.norms(centArr, k)
 
-  private def dim: Int = centroids.length / k
-
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    require(n == dim, s"$prettyName: vector dim $n != centroid dim $dim")
-    var best = 0; var bestScore = Double.NegativeInfinity
-    var c = 0
-    while (c < k) {
-      var ab = 0.0; var i = 0
-      while (i < n) { ab += x.getDouble(i) * centArr(c * n + i); i += 1 }
-      val d = centNorm(c)
-      val score = if (d == 0.0) 0.0 else ab / d // vector norm constant per row — omit
-      if (score > bestScore) { bestScore = score; best = c }
-      c += 1
-    }
-    best
-  }
+  override def nullSafeEval(v: Any): Any =
+    NearestCentroid.nearest(v.asInstanceOf[ArrayData], centArr, centNorm)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cRef = ctx.addReferenceObj("centroids", centArr, "double[]")
     val nRef = ctx.addReferenceObj("centNorms", centNorm, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore")
-      val ab = ctx.freshName("ab")
-      val d = ctx.freshName("d")
-      val score = ctx.freshName("score")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "$prettyName: vector dim " + $n + " != centroid dim $dim");
-         |}
-         |int $best = 0;
-         |double $bestScore = Double.NEGATIVE_INFINITY;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $ab = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $ab += $a.getDouble($i) * $cRef[$c * $n + $i];
-         |  }
-         |  final double $d = $nRef[$c];
-         |  final double $score = ($d == 0.0) ? 0.0 : $ab / $d;
-         |  if ($score > $bestScore) { $bestScore = $score; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.NearestCentroid.nearest($a, $cRef, $nRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object NearestCentroid {
+  /** L2 norms of the k rows of a row-major k × dim centroid matrix. */
+  def norms(centroids: Array[Double], k: Int): Array[Double] = {
+    val dim = centroids.length / k
+    Array.tabulate(k) { c =>
+      var s = 0.0; var i = 0
+      while (i < dim) { val v = centroids(c * dim + i); s += v * v; i += 1 }
+      math.sqrt(s)
+    }
+  }
+
+  /** The argmax-cosine cell, followed by the runner-up when the best score
+    * beats it by less than `epsilon`. The vector's own norm is constant
+    * per row, so it is left out of the score; ties keep the lowest index.
+    */
+  def nearestCells(x: ArrayData, centroids: Array[Double], norms: Array[Double],
+      epsilon: Double): Array[Int] = {
+    val n = x.numElements()
+    val k = norms.length
+    val dim = centroids.length / k
+    if (n != dim) {
+      throw new IllegalArgumentException(s"vec_nearest_centroid: vector dim $n != centroid dim $dim")
+    }
+    var best = 0; var bestScore = Double.NegativeInfinity
+    var second = -1; var secondScore = Double.NegativeInfinity
+    var c = 0
+    while (c < k) {
+      var ab = 0.0; var i = 0
+      while (i < n) { ab += x.getDouble(i) * centroids(c * n + i); i += 1 }
+      val d = norms(c)
+      val score = if (d == 0.0) 0.0 else ab / d
+      if (score > bestScore) {
+        second = best; secondScore = bestScore
+        best = c; bestScore = score
+      } else if (score > secondScore) { second = c; secondScore = score }
+      c += 1
+    }
+    if (k > 1 && second >= 0 && bestScore - secondScore < epsilon) Array(best, second)
+    else Array(best)
+  }
+
+  def nearest(x: ArrayData, centroids: Array[Double], norms: Array[Double]): Int =
+    nearestCells(x, centroids, norms, 0.0)(0)
 }
 
 /** Multi-assignment variant of [[NearestCentroid]] for SemDeDup boundary
@@ -346,9 +361,8 @@ case class NearestCentroid(
   * a cell boundary is blocked into both cells, so a near-dup pair split by
   * the k-means partition can still meet in the shared second assignment.
   * `epsilon <= 0` degenerates to a 1-element array (exactly
-  * [[NearestCentroid]]'s cell — same deterministic lowest-index tie rule).
-  * Returns array<int> of 1 or 2 DISTINCT cell ids; interpreted vs codegen
-  * paths are bit-identical (same comparison order).
+  * [[NearestCentroid]]'s cell — both run [[NearestCentroid.nearestCells]]).
+  * Returns array<int> of 1 or 2 DISTINCT cell ids.
   */
 case class NearCentroidCells(
     child: Expression,
@@ -370,129 +384,20 @@ case class NearCentroidCells(
   }
 
   @transient private lazy val centArr: Array[Double] = centroids.toArray
-  @transient private lazy val centNorm: Array[Double] = {
-    val d = centroids.length / k
-    Array.tabulate(k) { c =>
-      var s = 0.0; var i = 0
-      while (i < d) { val v = centArr(c * d + i); s += v * v; i += 1 }
-      math.sqrt(s)
-    }
-  }
+  @transient private lazy val centNorm: Array[Double] = NearestCentroid.norms(centArr, k)
 
-  private def dim: Int = centroids.length / k
-
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    require(n == dim, s"$prettyName: vector dim $n != centroid dim $dim")
-    var best = 0; var bestScore = Double.NegativeInfinity
-    var second = -1; var secondScore = Double.NegativeInfinity
-    var c = 0
-    while (c < k) {
-      var ab = 0.0; var i = 0
-      while (i < n) { ab += x.getDouble(i) * centArr(c * n + i); i += 1 }
-      val d = centNorm(c)
-      val score = if (d == 0.0) 0.0 else ab / d
-      if (score > bestScore) {
-        second = best; secondScore = bestScore
-        best = c; bestScore = score
-      } else if (score > secondScore) { second = c; secondScore = score }
-      c += 1
-    }
-    val both = k > 1 && second >= 0 && bestScore - secondScore < epsilon
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      if (both) Array(best, second) else Array(best))
-  }
+  override def nullSafeEval(v: Any): Any = new GenericArrayData(
+    NearestCentroid.nearestCells(v.asInstanceOf[ArrayData], centArr, centNorm, epsilon))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cRef = ctx.addReferenceObj("centroids", centArr, "double[]")
     val nRef = ctx.addReferenceObj("centNorms", centNorm, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore")
-      val second = ctx.freshName("second")
-      val secondScore = ctx.freshName("secondScore")
-      val ab = ctx.freshName("ab")
-      val d = ctx.freshName("d")
-      val score = ctx.freshName("score")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "$prettyName: vector dim " + $n + " != centroid dim $dim");
-         |}
-         |int $best = 0;
-         |double $bestScore = Double.NEGATIVE_INFINITY;
-         |int $second = -1;
-         |double $secondScore = Double.NEGATIVE_INFINITY;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $ab = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $ab += $a.getDouble($i) * $cRef[$c * $n + $i];
-         |  }
-         |  final double $d = $nRef[$c];
-         |  final double $score = ($d == 0.0) ? 0.0 : $ab / $d;
-         |  if ($score > $bestScore) {
-         |    $second = $best; $secondScore = $bestScore;
-         |    $best = $c; $bestScore = $score;
-         |  } else if ($score > $secondScore) {
-         |    $second = $c; $secondScore = $score;
-         |  }
-         |}
-         |final int[] $out =
-         |  ($k > 1 && $second >= 0 && $bestScore - $secondScore < $epsilon)
-         |    ? new int[]{$best, $second} : new int[]{$best};
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = new org.apache.spark.sql.catalyst.util." +
+      s"GenericArrayData(graft.plans.NearestCentroid.nearestCells($a, $cRef, $nRef, $epsilon));")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Squared L2 distance Σ (aᵢ-bᵢ)², fused single pass. */
-case class L2DistanceSq(left: Expression, right: Expression) extends BinaryVectorExpression {
-  override def prettyName: String = "vec_l2sq"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) { val dd = x.getDouble(i) - y.getDouble(i); s += dd * dd; i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val dd = ctx.freshName("dd")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $dd = $a.getDouble($i) - $b.getDouble($i);
-         |    $s += $dd * $dd;
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Per-vector symmetric int8 quantizer: array<double> → dim signed bytes
@@ -551,8 +456,25 @@ case class Int8ColCosine(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val codes = a.asInstanceOf[Array[Byte]]
     val q = b.asInstanceOf[ArrayData]
+    if (codes.length != q.numElements()) null else Int8ColCosine.cosine(codes, q)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+       |if ($a.length != $b.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.plans.Int8ColCosine.cosine($a, $b);
+       |}
+     """.stripMargin)
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object Int8ColCosine {
+  def cosine(codes: Array[Byte], q: ArrayData): Double = {
     val n = codes.length
-    if (n != q.numElements()) return null
     var ab = 0.0; var aa = 0.0; var bb = 0.0
     var i = 0
     while (i < n) {
@@ -562,36 +484,6 @@ case class Int8ColCosine(left: Expression, right: Expression)
     val d = math.sqrt(aa) * math.sqrt(bb)
     if (d == 0.0) 0.0 else ab / d
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val ab = ctx.freshName("ab")
-      val aa = ctx.freshName("aa")
-      val bb = ctx.freshName("bb")
-      val c = ctx.freshName("c")
-      val y = ctx.freshName("y")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = $a.length;
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $ab = 0.0; double $aa = 0.0; double $bb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $c = (double) $a[$i];
-         |    final double $y = $b.getDouble($i);
-         |    $ab += $c * $y; $aa += $c * $c; $bb += $y * $y;
-         |  }
-         |  final double $d = java.lang.Math.sqrt($aa) * java.lang.Math.sqrt($bb);
-         |  ${ev.value} = ($d == 0.0) ? 0.0 : $ab / $d;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 object Int8Codes {
@@ -644,20 +536,8 @@ case class Int8QueryCosine(child: Expression, query: Seq[Double])
     math.sqrt(s)
   }
 
-  private def dim: Int = query.length
-
-  override def nullSafeEval(v: Any): Any = {
-    val codes = v.asInstanceOf[Array[Byte]]
-    require(codes.length == dim,
-      s"$prettyName: code length ${codes.length} != query dim $dim")
-    var ab = 0.0; var bb = 0.0; var i = 0
-    while (i < dim) {
-      val c = codes(i).toDouble
-      ab += c * qArr(i); bb += c * c; i += 1
-    }
-    val d = math.sqrt(bb) * qNorm
-    if (d == 0.0) 0.0 else ab / d
-  }
+  override def nullSafeEval(v: Any): Any =
+    Int8QueryCosine.cosine(v.asInstanceOf[Array[Byte]], qArr, qNorm)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val qRef = ctx.addReferenceObj("query", qArr, "double[]")
@@ -665,30 +545,27 @@ case class Int8QueryCosine(child: Expression, query: Seq[Double])
     // through toString, which for non-finite values is not valid Java
     val qNormRef = ctx.addReferenceObj("qNorm", java.lang.Double.valueOf(qNorm),
       "java.lang.Double")
-    nullSafeCodeGen(ctx, ev, a => {
-      val ab = ctx.freshName("ab")
-      val bb = ctx.freshName("bb")
-      val c = ctx.freshName("c")
-      val d = ctx.freshName("d")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($a.length != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "$prettyName: code length " + $a.length + " != query dim $dim");
-         |}
-         |double $ab = 0.0;
-         |double $bb = 0.0;
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  final double $c = (double) $a[$i];
-         |  $ab += $c * $qRef[$i];
-         |  $bb += $c * $c;
-         |}
-         |final double $d = Math.sqrt($bb) * $qNormRef.doubleValue();
-         |${ev.value} = ($d == 0.0) ? 0.0 : $ab / $d;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.Int8QueryCosine.cosine($a, $qRef, $qNormRef.doubleValue());")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object Int8QueryCosine {
+  def cosine(codes: Array[Byte], query: Array[Double], queryNorm: Double): Double = {
+    val dim = query.length
+    if (codes.length != dim) {
+      throw new IllegalArgumentException(
+        s"int8_query_cosine: code length ${codes.length} != query dim $dim")
+    }
+    var ab = 0.0; var bb = 0.0; var i = 0
+    while (i < dim) {
+      val c = codes(i).toDouble
+      ab += c * query(i); bb += c * c; i += 1
+    }
+    val d = math.sqrt(bb) * queryNorm
+    if (d == 0.0) 0.0 else ab / d
+  }
 }

@@ -420,6 +420,13 @@ class PlanSpec extends AnyFunSuite {
     assert(p.linesIterator.count(_.contains("Exchange")) <= 1)
   }
 
+  test("embedder normalizes in codegen: no lambda in the analyzed plan") {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    val analyzed = TextAnalysisOps.embedVectors(spark, sf).queryExecution.analyzed
+    val lambdas = analyzed.flatMap(_.expressions.flatMap(_.collect { case l: LambdaFunction => l }))
+    assert(lambdas.isEmpty, analyzed.treeString)
+  }
+
   test("quantization plans zero exchanges (pure map-side projection)") {
     val p = plan(KnnOps.quantize(spark, sf))
     assert(p.linesIterator.count(_.contains("Exchange")) <= 1, p)
